@@ -913,8 +913,7 @@ def _q_emb_cosine_topk(spark, sf_dir):
     q = _query_vec(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") != _QUERY_VEC_ID)
-    out = cosine_topk(emb, q, k=10)
-    return out.select("vec_id", F.round("score", 4).alias("score"))
+    return cosine_topk(emb, q, k=10, decimals=4)
 
 
 def _q_emb_near_dups(spark, sf_dir):
@@ -1068,10 +1067,8 @@ def _q_kg_components(spark, sf_dir):
     O(log n) rounds, stress-proven exact on 1M-node diameter-99 chains —
     see BASELINE.md).  Oracled: a recursive transitive-closure CTE in
     DuckDB computing the same min-reachable-node label."""
-    from ie_spark.pipeline.canonicalize import connected_components_star
-    comp = connected_components_star(
-        _q_kg_edges(spark, sf_dir).select("src", "dst"))
-    return comp
+    from ie_spark.pipeline.canonicalize import connected_components
+    return connected_components(_q_kg_edges(spark, sf_dir).select("src", "dst"))
 
 
 def _q_kg_link_pred(spark, sf_dir):
@@ -2131,7 +2128,7 @@ def _components_sql_tail() -> str:
     """Connected components downstream of an ``e(src, dst)`` CTE:
     recursive transitive closure over the symmetric edge list, label =
     min reachable node (the same contract as
-    pipeline.canonicalize.connected_components_star).  Closure is
+    pipeline.canonicalize.connected_components).  Closure is
     O(Σ component²) rows — fine for an oracle, which is exactly why the
     Spark side uses star contraction instead."""
     return """

@@ -35,11 +35,13 @@ def _norm(v) -> Column:
 
 
 def cosine_topk(emb: DataFrame, query: list[float], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding"
-                ) -> DataFrame:
+                id_col: str = "vec_id", vec_col: str = "embedding",
+                decimals: int = 6) -> DataFrame:
     """Exact brute-force cosine top-k for one query vector.
 
-    → (id, score) ordered by score desc, id asc (deterministic ties)."""
+    → (id, score) ordered by score desc, id asc (deterministic ties);
+    the score is rounded once, to ``decimals`` places — rounding it again
+    coarser would turn e.g. 0.3067498 into 0.30675 and then 0.3068."""
     q = F.array(*[F.lit(float(x)) for x in query])
     qn = math.sqrt(sum(float(x) * x for x in query)) or 1.0
     # scale-adaptive fan-out (guide §2.5): a single-file corpus arrives as
@@ -52,7 +54,7 @@ def cosine_topk(emb: DataFrame, query: list[float], k: int = 10,
         (_dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * F.lit(qn)))
         .alias("score"))
     return (scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-            .select(id_col, F.round("score", 6).alias("score")))
+            .select(id_col, F.round("score", decimals).alias("score")))
 
 
 def random_hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:

@@ -29,8 +29,10 @@ they hold at 10^12-turn scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ie_spark.obs import observed
 
 
 def degree_profile(edges: DataFrame, sort: bool = True,
@@ -342,12 +344,13 @@ def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
     a KG consumer schedules after each pipeline run.  Outputs are
     unsorted (a global output sort buys nothing for a table handed to
     downstream jobs); per-pass row counts and wall seconds come back as
-    a stats dict for the caller's JSON line.
+    a stats dict for the caller's JSON line; a pass's row count is
+    observed on its write.
     """
     import os as _os
     import time as _time
 
-    from ie_spark.pipeline.canonicalize import connected_components_star
+    from ie_spark.pipeline.canonicalize import connected_components
 
     runners = {
         "degree": lambda e: degree_profile(e, sort=False, checkpoint=False),
@@ -356,8 +359,7 @@ def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
         "triangles": lambda e: triangle_counts(e, sort=False),
         "pagerank": lambda e: pagerank_mass(e, iterations=iterations,
                                             sort=False),
-        "components": lambda e: connected_components_star(
-            e.select("src", "dst")),
+        "components": lambda e: connected_components(e.select("src", "dst")),
         "link_pred": lambda e: link_prediction(e, max_fanout=max_fanout,
                                                sort=False),
         "bfs": lambda e: bfs_distances(e, sort=False),
@@ -372,11 +374,11 @@ def run_graph_analytics(spark, edges: DataFrame, out_dir: str,
     stats: dict = {"passes": {}}
     for name in passes:
         t0 = _time.time()
-        out = runners[name](e)
-        path = _os.path.join(out_dir, name)
-        out.write.mode("overwrite").parquet(path)
+        rows = Observation()
+        out = runners[name](e).observe(rows, F.count(F.lit(1)).alias("n"))
+        out.write.mode("overwrite").parquet(_os.path.join(out_dir, name))
         stats["passes"][name] = {
-            "rows": spark.read.parquet(path).count(),
+            "rows": observed(rows).get("n", 0),
             "sec": round(_time.time() - t0, 3),
         }
     return stats

@@ -8,18 +8,23 @@ scale: vertices are mention stems and KB entity ids; edges are
   - _AKA alias pairs (appositives, ``ccg.py:1073-1183``)
   - _POSS is NOT an identity edge (ownership ≠ sameness)
 
-Algorithm: iterative min-label propagation over DataFrames (HashToMin
-style), early-stopping on a converged count and ``localCheckpoint`` to
-truncate lineage — no GraphFrames dependency.  The mention–entity graph is
-near-bipartite and shallow (SURVEY.md §7.3), so convergence is a handful of
-iterations; each iteration is one shuffle on the vertex id, which AQE
-coalesces as components collapse.
+Algorithm: alternating large-star / small-star connected components over
+DataFrames (``connected_components``), no GraphFrames dependency.  Each
+star step is one exchange on the node key; each round is one
+``localCheckpoint`` that truncates lineage and, through an
+``Observation``, reports whether the round's input was already final.
+Rounds are O(log n) even on long chains, and a graph that does not
+converge within ``max_iter`` rounds raises instead of returning partial
+labels.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from ie_spark.obs import observed
 
 
 def build_identity_edges(linked_mentions: DataFrame,
@@ -54,99 +59,78 @@ def build_identity_edges(linked_mentions: DataFrame,
     return link_edges.unionByName(aka_edges).distinct()
 
 
-def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm).  Converges in O(log n) rounds even on
-    long chains and *shrinks* the edge set as it runs, unlike plain label
-    propagation whose every round joins the full edge set — this is the
-    10^12-scale path.
+def _large_star(e: DataFrame, obs: Observation) -> DataFrame:
+    """Per node u over both edge directions, m = min(N(u) ∪ {u}); link
+    every neighbor v > u to m.  ``obs`` counts the nodes of ``e`` that
+    break the star-forest shape: a node with a smaller neighbor and any
+    second distinct neighbor."""
+    w = Window.partitionBy("u")
+    sym = e.unionByName(e.select(F.col("v").alias("u"),
+                                 F.col("u").alias("v")))
+    nb = (sym.repartition("u").distinct()
+          .withColumn("lo", F.min("v").over(w))
+          .withColumn("hi", F.max("v").over(w)))
+    # one row per node (its smallest neighbor, unique after distinct)
+    broken = (F.col("v") == F.col("lo")) & (F.col("lo") < F.col("u")) \
+        & (F.col("hi") > F.col("lo"))
+    return (nb.observe(obs, F.count_if(broken).alias("broken"))
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"),
+                    F.least("lo", "u").alias("v")))
 
-    large-star: per node u, link every neighbor v > u to m = min(N(u) ∪ u)
-    small-star: orient edges large→small; per node u, link u and every
-                neighbor v ≤ u to m
 
-    → (node, component) with component = min node key (same contract as
-    ``connected_components``)."""
-    # canonical orientation: keep pairs as (big, small)
+def _small_star(e: DataFrame) -> DataFrame:
+    """Per node u over its smaller neighbors, m = min(N(u)); link u and
+    every such neighbor to m.  The row whose neighbor is m itself carries
+    the (u, m) edge, so the step never emits more rows than it reads."""
+    w = Window.partitionBy("u")
+    nb = (e.repartition("u").distinct()
+          .withColumn("m", F.min("v").over(w)))
+    return nb.select(F.when(F.col("v") == F.col("m"), F.col("u"))
+                     .otherwise(F.col("v")).alias("u"),
+                     F.col("m").alias("v"))
+
+
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+    """edges (src, dst) → (node, component) with component = min node key
+    in the component (deterministic canonical representative).  Self-loops
+    carry no identity: a node with only a self-loop is not in the output.
+
+    Alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 — public
+    algorithm) over edges oriented (u, v) with u > v.  A round converges
+    in O(log n) even on long chains, and each step is one exchange on the
+    node key: a window over u gives the per-node minimum without a
+    groupBy joined back, and duplicate pairs fold away in the same stage.
+
+    Convergence needs no extra job: a round's input is final exactly when
+    it is a star forest (no node has two distinct smaller neighbors, or a
+    smaller and a larger one), and the large-star step counts the nodes
+    that break that shape with an ``Observation`` read off the round's
+    ``localCheckpoint``.  The labels are then the edges plus each star
+    center labelling itself.  Raises ``RuntimeError`` if ``max_iter``
+    rounds do not converge — never returns partial labels.
+    """
     e = (edges.select(F.greatest("src", "dst").alias("u"),
                       F.least("src", "dst").alias("v"))
          .filter(F.col("u") != F.col("v"))
-         .distinct().localCheckpoint())
-
+         .localCheckpoint(eager=False))
     for _ in range(max_iter):
-        # ---- large-star ----
-        # neighborhoods over symmetric edges
-        sym = e.select("u", "v").union(e.select(F.col("v").alias("u"),
-                                                F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (sym.join(m, "u")
-                 .filter(F.col("v") > F.col("u"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .filter(F.col("u") != F.col("v")))
-        e1 = large.distinct()
-        # ---- small-star ----
-        sym1 = e1.select("u", "v")  # already oriented u > v by construction
-        m2 = sym1.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        small = (sym1.join(m2, "u")
-                 .select(F.col("v").alias("a"), F.col("m").alias("b"))
-                 .union(m2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-                 .filter(F.col("a") != F.col("b"))
-                 .select(F.greatest("a", "b").alias("u"),
-                         F.least("a", "b").alias("v"))
-                 .distinct())
-        new_e = small.localCheckpoint()
-        changed = (new_e.exceptAll(e).limit(1).count()
-                   + e.exceptAll(new_e).limit(1).count())
-        e = new_e
-        if changed == 0:
-            break
-
-    # at convergence every node points at its component min
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = (e.select(F.col("v").alias("node")).distinct()
-             .join(e.select(F.col("u").alias("node")).distinct(),
-                   "node", "left_anti")
-             .withColumn("component", F.col("node")))
-    return labels.unionByName(roots).distinct()
+        obs = Observation()
+        nxt = _small_star(_large_star(e, obs)).localCheckpoint()
+        # no metrics: the round's input was empty, which is converged
+        if not observed(obs).get("broken"):
+            return (e.union(e.select("v", "v"))
+                    .select(F.col("u").alias("node"),
+                            F.col("v").alias("component"))
+                    .distinct())
+        e = nxt
+    raise RuntimeError(
+        f"connected components did not converge in {max_iter} rounds")
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
-    """edges (src, dst) → (node, component) with component = min node key
-    in the component (deterministic canonical representative).
-
-    Iterative min-label propagation; each round:
-      label(n) = min(label(n), min over neighbors' labels)
-    stop when no label changes.  O(diameter) rounds; our graphs are shallow.
-    """
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
-
-    labels = (sym.select(F.col("src").alias("node"))
-              .distinct()
-              .withColumn("component", F.col("node")))
-
-    for _ in range(max_iter):
-        # neighbor labels: join edges with labels on dst, min per src
-        neigh = (sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-                 .groupBy("src").agg(F.min("component").alias("n_comp"))
-                 .withColumnRenamed("src", "node"))
-        new_labels = (labels.join(neigh, "node", "left")
-                      .select("node",
-                              F.least(F.col("component"),
-                                      F.coalesce(F.col("n_comp"),
-                                                 F.col("component")))
-                              .alias("component")))
-        new_labels = new_labels.localCheckpoint()
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .filter(F.col("n.component") != F.col("o.component"))
-                   .limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+# public alias: kgbench imports the algorithm under this name
+connected_components_star = connected_components
 
 
 def canonical_nodes(labels: DataFrame, linked_mentions: DataFrame,

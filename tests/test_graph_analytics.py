@@ -192,20 +192,30 @@ def test_pagerank_semantics(spark):
 
 def test_components_cross_engine_and_union_find(spark):
     """Star-contraction CC equals both the union-find reference and the
-    driver oracle's recursive-closure SQL tail on random graphs."""
+    DuckDB oracle's recursive-closure SQL tail on random graphs (repeated
+    pairs included), a hub, and chains longer than 20 — one with ordered
+    ids, one with shuffled ids."""
     from __spark_entry__ import _components_sql_tail
-    from ie_spark.pipeline.canonicalize import connected_components_star
-    for seed in (0, 1, 2):
-        rows = _random_rows(seed)
+    from ie_spark.pipeline.canonicalize import (connected_components,
+                                                connected_components_star)
+    assert connected_components_star is connected_components
+    graphs = [_random_rows(seed, multi=seed % 2 == 1) for seed in range(4)]
+    graphs.append([("hub", f"s{i:02d}") if i % 2 else (f"s{i:02d}", "hub")
+                   for i in range(40)])
+    ids = [f"c{i:02d}" for i in range(46)]
+    graphs.append(list(zip(ids, ids[1:])))
+    random.Random(7).shuffle(ids)
+    graphs.append(list(zip(ids, ids[1:])))
+    for i, rows in enumerate(graphs):
         edges = spark.createDataFrame(rows, "src string, dst string")
         got = sorted((r["node"], r["component"])
-                     for r in connected_components_star(edges).collect())
-        assert got == sorted(_cc_ref(rows).items()), f"seed={seed}"
+                     for r in connected_components(edges).collect())
+        assert got == sorted(_cc_ref(rows).items()), f"graph {i}"
         sql = (f"WITH RECURSIVE e(src, dst) AS "
                f"(SELECT * FROM (VALUES {_vals(rows)})), "
                f"{_components_sql_tail()}")
         want = sorted(duckdb.sql(sql).fetchall())
-        assert got == want, f"seed={seed}"
+        assert got == want, f"graph {i}"
 
 
 # ---------------------------------------------------------------------------
@@ -346,18 +356,17 @@ def test_bfs_cross_engine(spark):
 
 
 def test_graph_analytics_plans_no_nested_loop(spark):
-    """All three operators must stay equi-join shaped: the triangle
+    """All the operators must stay equi-join shaped: the triangle
     closing join keys on (least, greatest) expressions, every pagerank
-    join keys on a node id, and the star contraction's final-output plan
-    carries the roots anti-join (its per-iteration joins execute inside
-    the loop and are covered by the 1M-node chain stress) — a nested-loop
-    anywhere is a 10^12-scale regression."""
-    from ie_spark.pipeline.canonicalize import connected_components_star
+    join keys on a node id, and the star contraction joins nothing (its
+    rounds are windows, run inside the call) — a nested-loop anywhere is
+    a 10^12-scale regression."""
+    from ie_spark.pipeline.canonicalize import connected_components
     rows = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]
     df = _edges_df(spark, rows)
     for out in (triangle_counts(df, sort=False),
                 pagerank_mass(df, iterations=2, sort=False),
-                connected_components_star(df.select("src", "dst")),
+                connected_components(df.select("src", "dst")),
                 link_prediction(df, min_common=1, sort=False),
                 bfs_distances(df, max_depth=2, sort=False)):
         plan = out._jdf.queryExecution().executedPlan().toString()
@@ -403,10 +412,20 @@ def test_run_graph_analytics_job(spark, tmp_path):
                spark.read.parquet(out + "/triangles").collect()}
     assert got_tri == _tri_ref(rows)
     assert stats["passes"]["degree"]["rows"] == 4
+    # rows are observed on the write: they equal what was written
+    for name, p in stats["passes"].items():
+        assert p["rows"] == spark.read.parquet(f"{out}/{name}").count()
     assert all(p["sec"] >= 0 for p in stats["passes"].values())
 
     with pytest.raises(ValueError, match="unknown passes"):
         run_graph_analytics(spark, edges, out, passes=["nope"])
+
+    # an empty pass output still reports its rows
+    loops = _edges_df(spark, [("a", "a")])
+    stats = run_graph_analytics(spark, loops, out,
+                                passes=["components", "bfs", "triangles"])
+    assert {p: s["rows"] for p, s in stats["passes"].items()} == \
+        {"components": 0, "bfs": 0, "triangles": 0}
 
 
 def test_bfs_empty_and_self_loop_graphs(spark):

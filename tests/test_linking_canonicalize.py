@@ -151,33 +151,105 @@ def test_skew_salting_repartition(spark):
     assert pid > 1
 
 
+def _label_propagation(pairs):
+    """Driver-side min-label propagation: every node takes the smallest
+    label among itself and its neighbours until nothing changes."""
+    label = {n: n for p in pairs for n in p}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in pairs:
+            m = min(label[a], label[b])
+            if label[a] != m or label[b] != m:
+                label[a] = label[b] = m
+                changed = True
+    return set(label.items())
+
+
 def test_star_cc_equivalent_to_label_propagation(spark):
-    """Property check: alternating large/small-star CC (the 10^12-scale
-    path) produces identical components to min-label propagation on random
-    graphs, including long chains (worst case for propagation)."""
+    """Property check: the large/small-star CC produces the same
+    components as min-label propagation on random graphs, a hub, and
+    chains longer than 20 (the worst case for propagation), one with
+    ordered ids and one with shuffled ids."""
     import random as _random
     from ie_spark.pipeline.canonicalize import connected_components_star
 
+    graphs = []
     for seed in (0, 1, 2, 3):
         r = _random.Random(seed)
         n = r.randint(5, 28)
         nodes = [f"n{i:02d}" for i in range(n)]
         m = r.randint(3, 40)
         pairs = {(r.choice(nodes), r.choice(nodes)) for _ in range(m)}
-        pairs = [(a, b) for a, b in pairs if a != b] or [("n00", "n01")]
-        edges = spark.createDataFrame(pairs, "src string, dst string")
-        a = {(x.node, x.component)
-             for x in connected_components(edges).collect()}
-        b = {(x.node, x.component)
-             for x in connected_components_star(edges).collect()}
-        assert a == b, f"seed={seed}: {sorted(a-b)[:5]} vs {sorted(b-a)[:5]}"
+        graphs.append([(a, b) for a, b in pairs if a != b]
+                      or [("n00", "n01")])
+    graphs.append([("hub", f"s{i:02d}") if i % 2 else (f"s{i:02d}", "hub")
+                   for i in range(30)])
+    ids = [f"c{i:02d}" for i in range(32)]
+    graphs.append(list(zip(ids, ids[1:])))
+    _random.Random(5).shuffle(ids)
+    graphs.append(list(zip(ids, ids[1:])))
 
-    # explicit long chain (diameter = n-1)
-    chain = [(f"c{i:02d}", f"c{i+1:02d}") for i in range(12)]
+    for i, pairs in enumerate(graphs):
+        edges = spark.createDataFrame(pairs, "src string, dst string")
+        got = {(x.node, x.component)
+               for x in connected_components_star(edges).collect()}
+        want = _label_propagation(pairs)
+        assert got == want, \
+            f"graph {i}: {sorted(got - want)[:5]} vs {sorted(want - got)[:5]}"
+
+    # explicit long chain (diameter = n-1): one component, the min id
+    chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(24)]
     edges = spark.createDataFrame(chain, "src string, dst string")
     comp = {x.node: x.component
-            for x in connected_components_star(edges).collect()}
-    assert set(comp.values()) == {"c00"} and len(comp) == 13
+            for x in connected_components(edges).collect()}
+    assert set(comp.values()) == {"c00"} and len(comp) == 25
+
+
+def test_connected_components_empty_graph(spark):
+    for rows in ([], [("a", "a")]):
+        edges = spark.createDataFrame(rows, "src string, dst string")
+        assert connected_components(edges).count() == 0
+
+
+def test_connected_components_raises_at_max_iter(spark):
+    """A graph that needs more rounds than allowed fails loudly instead of
+    returning partial labels."""
+    chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(40)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(edges, max_iter=2)
+
+
+def test_connected_components_job_count_and_plan(spark):
+    """Regression gate on the cost of a round.  On this hub + chains graph
+    the call plus a count of its result took 92 Spark jobs when every star
+    step was a groupBy joined back plus a distinct and every round ran two
+    exceptAll convergence jobs; one exchange per step and a convergence
+    count observed on the round's checkpoint must keep it at half that.
+    The result carries no CollectMetrics node, so a declared query built
+    on it (kg_components) stays free of diagnostics."""
+    sc = spark.sparkContext
+    rows = [("hub", f"s{i:03d}") if i % 2 else (f"s{i:03d}", "hub")
+            for i in range(200)]
+    rows += [(f"c{c}_{i:02d}", f"c{c}_{i + 1:02d}")
+             for c in range(8) for i in range(29)]
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    edges.count()
+    group = "test-cc-job-count"
+    sc.setJobGroup(group, "connected components")
+    try:
+        out = connected_components(edges)
+        assert out.count() == 201 + 8 * 30
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 92 // 2, n_jobs
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "CollectMetrics" not in plan
 
 
 def test_extraction_job_is_single_pass(spark, tmp_path):

@@ -2,6 +2,7 @@
 n-gram Jaccard / embedding cosine), similarity search (brute vs ANN recall),
 text stats, multimodal plumbing."""
 
+import math
 import random
 
 import pytest
@@ -99,6 +100,33 @@ def test_cosine_topk_orders_correctly(spark):
     out = cosine_topk(emb, [1.0, 0.0, 0.0, 0.0], k=2).collect()
     assert out[0].vec_id == 0 and out[0].score == 1.0
     assert out[1].vec_id == 9
+
+
+def test_emb_cosine_topk_rounds_once(spark, tmp_path):
+    """A cosine of 0.3067498 reads 0.3067 at 4 decimals; rounding it to 6
+    first (0.30675) and then to 4 gave 0.3068.  The query must match its
+    DuckDB oracle, which rounds once."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    x = 0.3067498
+    vecs = [[1.0, 0.0], [x, math.sqrt(1 - x * x)], [0.5, 0.5]]
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(len(vecs)), pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32()))}),
+        str(tmp_path / "embeddings.parquet"))
+    got = sorted(tuple(r) for r in
+                 entry.queries()["emb_cosine_topk"](spark, str(tmp_path))
+                 .collect())
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM read_parquet("
+                f"'{tmp_path / 'embeddings.parquet'}')")
+    want = sorted(con.execute(entry.oracle_sql()["emb_cosine_topk"])
+                  .fetchall())
+    assert got == want
+    assert (1, 0.3067) in got
 
 
 def test_ann_recall_vs_brute(spark, sf_dir):
